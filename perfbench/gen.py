@@ -6,20 +6,17 @@ computed here without graft. The same seed gives byte-identical files.
 
     python3 perfbench/gen.py <workload> <seed> <dest>
 """
-import datetime
 import json
-import math
 import os
 import shutil
 import sys
-from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-VERSION = 1
+VERSION = 2
 
 # wordcount: a Zipf corpus with about 28 tokens per line.
 WC_TOKENS = 6_000_000
@@ -28,27 +25,27 @@ WC_ZIPF_S = 1.05
 WC_TOKENS_PER_LINE = 28
 WC_FILES = 8
 
-# log_tree: a MapReduceLog tree of datasets x slowstarts x repetitions.
-LT_DATASETS = ["100mb", "500mb", "1G", "5G"]
-LT_FLAT = {"1G", "5G"}  # these also keep one run's logs flat in the dir
-LT_SLOWSTARTS = [0.2, 0.5, 0.8, 1.0]
-LT_REPS = 3
-LT_NODES = 3  # graft reads an undelimited monitor log as 3 samples a step
-LT_STEPS = (60, 140)
-
-# query_mix: the tables the chosen registered queries read. They are the
-# same for every seed (the seed orders the queries), so the oracle's
-# answers can be cached with them.
+# query_mix: the tables the chosen registered queries read, in the shape
+# of the sf0.01 `events` and `documents` tables the queries are written
+# for (their measured properties are in NOTES.md). They are the same for
+# every seed (the seed orders the queries), so the oracle's answers can be
+# cached with them.
 QM_DATA_SEED = 0
 QM_EVENTS = 10_000
 QM_USERS = 150
-QM_DOCS = 500
 QM_EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
-QM_VOCAB = ("a the key value row table column data query scan join agg "
-            "group order sort merge hash batch stream window filter part "
-            "line customer spark fast slow big small index cache").split()
+QM_VALUE_MEAN = 50.0  # value is exponential, rounded to cents
+QM_PROPS_K = 100
+QM_DAYS = 30
+QM_DOCS = 500
+QM_DOC_WORDS = (10, 99)  # words in an original document, uniform
+QM_DUP_FRAC = 0.05  # documents that copy another one with " dup" appended
+QM_VOCAB = ("a agg batch big column customer data fast filter group hash "
+            "join key line merge order part query row scan slow small sort "
+            "spark stream table the value vector window").split()
+QM_SOURCES = 20
 QM_LANGS = ["en", "zh", "de", "fr", "es"]
-QM_LANG_P = [0.44, 0.14, 0.14, 0.14, 0.14]
+QM_LANG_P = [0.42, 0.145, 0.145, 0.145, 0.145]
 
 
 def tsv_digest(words, counts):
@@ -110,147 +107,6 @@ def gen_wordcount(seed, dest):
             "tsv_digest": tsv_digest(words, counts[used])}
 
 
-# --- log_tree ------------------------------------------------------------
-
-def _q6(x):
-    """Parity.pround(x, 6) cast to DECIMAL(28,6), as graft computes it."""
-    r = math.floor(x * 1000000.0 + 0.5) / 1000000.0
-    return Decimal(repr(r)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-
-
-def _exact_avg(xs):
-    """Parity.exactAvg: exact decimal sum of 6-dp values, as a double,
-    divided by the count."""
-    return float(sum((_q6(x) for x in xs), Decimal(0))) / len(xs)
-
-
-def _stage_times(events):
-    """StageAggregator over (epoch_s, map_pct, red_pct) events."""
-    ts = sorted(t for t, _, _ in events)
-    t0, t_end = ts[0], ts[-1]
-    last2 = ts[-2] if len(ts) > 1 else None
-    t_map = min((t for t, m, _ in events if m == 100), default=None)
-    s_start = min((t for t, _, r in events if r > 0), default=None)
-    s_end_first = min((t for t, m, r in events if m == 100 and r >= 90),
-                      default=None)
-    fallback = last2 if last2 is not None else ts[-1]
-    s_end = s_end_first if s_end_first is not None else (
-        fallback if s_start is not None else None)
-    total = float(t_end - t0)
-    map_s = float(t_map - t0) if t_map is not None else 0.0
-    shuffle_s = float(s_end - s_start) if (
-        s_start is not None and s_end is not None) else 0.0
-    reduce_s = float(t_end - s_end_first) if s_end_first is not None else 0.0
-    if t_map is None or s_start is None or s_end is None or s_end == s_start:
-        overlap = 0.0
-    else:
-        ov = float(max(0, min(t_map, s_end) - max(t0, s_start)))
-        overlap = math.floor(ov * 100.0 / (s_end - s_start) * 100.0 + 0.5) / 100.0
-    return [total, map_s, shuffle_s, reduce_s, overlap]
-
-
-def _fmt_ts(epoch):
-    return datetime.datetime.fromtimestamp(
-        epoch, datetime.timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
-
-
-def _monitor_log(rng, delimited):
-    """-> (text, {step: [cpu, ...]})"""
-    steps = int(rng.integers(*LT_STEPS))
-    lines = ["===== Real Performance Monitor Started ====="]
-    per_step = {}
-    truncated = rng.random() < 0.3
-    for s in range(steps):
-        cpus = [int(v) / 10 for v in rng.integers(0, 1001, LT_NODES)]
-        per_step[s] = cpus
-        lines.append(f"Sampling round {s}")
-        for n, c in enumerate(cpus, 1):
-            mem = int(rng.integers(5, 96))
-            lines.append(f"[worker{n}-node{n}] CPU: {c:.1f}% | MEM: {mem}%")
-        if delimited and not (truncated and s == steps - 1):
-            lines.append("-" * 40)
-    return "\n".join(lines) + "\n", per_step
-
-
-def _job_log(rng, dataset, slowstart, start):
-    """-> (text, [(epoch_s, map_pct, red_pct), ...])"""
-    n = int(rng.integers(40, 160))
-    t = start
-    map_done = int(n * rng.uniform(0.4, 0.8))
-    red_from = max(1, int(map_done * slowstart * rng.uniform(0.7, 1.0)))
-    killed = rng.random() < 0.1
-    if killed:
-        n = max(red_from + 2, int(n * 0.6))
-    events, m, r = [], 0, 0
-    for i in range(n):
-        t += int(rng.integers(1, 9))
-        m = 100 if i >= map_done else min(99, max(m, int(100 * i / map_done)))
-        if i >= red_from:
-            r = min(100, r + int(rng.integers(0, 6)))
-        if i == n - 1 and not killed:
-            m, r = 100, 100
-        events.append((t, m, r))
-    lines = [f"Input: {dataset} Slowstart: {slowstart}",
-             f"{_fmt_ts(start)},000 INFO mapreduce.Job: Running job: job_{start}"]
-    for (ts, mp, rp) in events:
-        lines.append(f"{_fmt_ts(ts)},000 INFO mapreduce.Job:  map {mp}% reduce {rp}%")
-        if rng.random() < 0.3:
-            lines.append(f"{_fmt_ts(ts)},500 INFO mapreduce.Job: Task Id : "
-                         f"attempt_{start}_m_{int(rng.integers(0, 999)):06d}_0, Status : SUCCEEDED")
-    lines.append("\tFile System Counters")
-    lines.append(f"\t\tMap input records={int(rng.integers(1, 10**8))}")
-    lines.append(f"\t\tReduce shuffle bytes={int(rng.integers(1, 10**10))}")
-    return "\n".join(lines) + "\n", events
-
-
-def gen_log_tree(seed, dest):
-    rng = np.random.default_rng([seed, 2])
-    root = f"{dest}/MapReduceLog"
-    base = int(datetime.datetime(2025, 11, 28, tzinfo=datetime.timezone.utc)
-               .timestamp())
-    runs = []  # (dataset dir name, slowstart, run_ts or "")
-    for d in LT_DATASETS:
-        for ss in LT_SLOWSTARTS:
-            for _ in range(LT_REPS):
-                runs.append((d, ss, None))
-            if d in LT_FLAT:
-                runs.append((d, ss, ""))
-    trends = {}  # (DATASET, ss, step) -> [run-step means]
-    stages = []
-    n_files = n_bytes = 0
-    for i, (d, ss, ts) in enumerate(runs):
-        start = base + i * 7200 + int(rng.integers(0, 3600))
-        if ts is None:
-            ts = _fmt_ts(start).replace("-", "").replace(":", "").replace(" ", "_")
-        run_dir = f"{root}/_{d}_slowstart_{ss}" + (f"/{ts}" if ts else "")
-        os.makedirs(run_dir, exist_ok=True)
-        mon, per_step = _monitor_log(rng, delimited=rng.random() >= 0.05)
-        job, events = _job_log(rng, d, ss, start)
-        for name, text in (("monitor.log", mon), ("job_output.log", job)):
-            data = text.encode()
-            with open(f"{run_dir}/{name}", "wb") as fh:
-                fh.write(data)
-            n_files += 1
-            n_bytes += len(data)
-        key = d.upper()
-        for step, cpus in per_step.items():
-            trends.setdefault((key, ss, step), []).append(_exact_avg(cpus))
-        stages.append([key, ss, ts] + _stage_times(events))
-    trend_rows = sorted(
-        [k[0], k[1], k[2], math.floor(_exact_avg(v) * 100.0 + 0.5) / 100.0]
-        for k, v in trends.items())
-    best = {}
-    for d in sorted({s[0] for s in stages}):
-        means = {}
-        for ss in LT_SLOWSTARTS:
-            tot = [s[3] for s in stages if s[0] == d and s[1] == ss]
-            means[ss] = float(sum(tot)) / len(tot)
-        lo = min(means.values())
-        best[d] = ",".join(str(ss) for ss in sorted(means) if means[ss] == lo)
-    return {"bytes": n_bytes, "files": n_files, "runs": len(runs),
-            "trends": trend_rows, "stages": sorted(stages), "best": best}
-
-
 # --- query_mix -----------------------------------------------------------
 
 def _write_table(path, table):
@@ -261,37 +117,38 @@ def gen_query_mix(seed, dest):
     rng = np.random.default_rng([QM_DATA_SEED, 3])
     os.makedirs(f"{dest}/tables")
     start = np.datetime64("2024-01-01T00:00:00", "us").astype(np.int64)
-    span = 30 * 86400 * 10**6
-    # distinct timestamps: sorted uniform offsets plus their rank
+    span = QM_DAYS * 86400 * 10**6
+    # distinct microsecond timestamps, ascending with event_id: sorted
+    # uniform offsets plus their rank
     off = np.sort(rng.integers(0, span - QM_EVENTS, QM_EVENTS)) + np.arange(QM_EVENTS)
-    ts = (start + rng.permutation(off)).astype("datetime64[us]")
+    value = np.round(rng.exponential(QM_VALUE_MEAN, QM_EVENTS), 2)
     events = pa.table({
         "event_id": pa.array(np.arange(QM_EVENTS, dtype=np.int64)),
-        "ts": pa.array(ts, pa.timestamp("us")),
+        # TIMESTAMP(MICROS) with isAdjustedToUTC=false, as in the sf tables
+        "ts": pa.array((start + off).astype("datetime64[us]"), pa.timestamp("us")),
         "user_id": pa.array(rng.integers(0, QM_USERS, QM_EVENTS).astype(np.int64)),
         "event_type": pa.array([QM_EVENT_TYPES[i] for i in
                                 rng.integers(0, len(QM_EVENT_TYPES), QM_EVENTS)]),
-        "value": pa.array(rng.integers(1, 49003, QM_EVENTS) / 100.0),
-        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, QM_EVENTS)]),
+        "value": pa.array(value),
+        "props": pa.array([f'{{"k": {k}}}' for k in
+                           rng.integers(0, QM_PROPS_K, QM_EVENTS)]),
     })
     _write_table(f"{dest}/tables/events.parquet", events)
-    texts = []
-    for i in range(QM_DOCS):
-        if i > 20 and rng.random() < 0.1:
-            # a near-duplicate of an earlier document: a few words changed
-            words = texts[int(rng.integers(0, i))].split(" ")
-            for j in rng.integers(0, len(words), max(1, len(words) // 12)):
-                words[j] = QM_VOCAB[int(rng.integers(0, len(QM_VOCAB)))]
-        else:
-            n = int(rng.integers(8, 81))
-            words = [QM_VOCAB[j] for j in rng.integers(0, len(QM_VOCAB), n)]
-        texts.append(" ".join(words))
+    lo, hi = QM_DOC_WORDS
+    texts = [" ".join(QM_VOCAB[j] for j in
+                      rng.integers(0, len(QM_VOCAB), int(rng.integers(lo, hi + 1))))
+             for _ in range(QM_DOCS)]
+    # near-duplicates: a copy of another document plus one word; a copy
+    # made from an earlier copy carries the word twice
+    for i in np.sort(rng.choice(QM_DOCS, int(QM_DOCS * QM_DUP_FRAC), replace=False)):
+        j = int(rng.integers(0, QM_DOCS - 1))
+        texts[i] = texts[j + (j >= i)] + " dup"
     docs = pa.table({
         "doc_id": pa.array(np.arange(QM_DOCS, dtype=np.int64)),
         "text": pa.array(texts),
         "lang": pa.array([QM_LANGS[i] for i in
                           rng.choice(len(QM_LANGS), QM_DOCS, p=QM_LANG_P)]),
-        "source": pa.array([f"src{i % 20}" for i in range(QM_DOCS)]),
+        "source": pa.array([f"src{i % QM_SOURCES}" for i in range(QM_DOCS)]),
         "n_chars": pa.array(np.array([len(t) for t in texts], dtype=np.int64)),
     })
     _write_table(f"{dest}/tables/documents.parquet", docs)
@@ -301,8 +158,7 @@ def gen_query_mix(seed, dest):
             "documents": QM_DOCS}
 
 
-GENERATORS = {"wordcount": gen_wordcount, "log_tree": gen_log_tree,
-              "query_mix": gen_query_mix}
+GENERATORS = {"wordcount": gen_wordcount, "query_mix": gen_query_mix}
 
 
 def generate(workload, seed, dest):

@@ -1,6 +1,6 @@
 """Benchmark for graft: one workload per call, in its own JVM.
 
-    python3 perfbench/run.py --workload wordcount|log_tree|query_mix \
+    python3 perfbench/run.py --workload wordcount|query_mix \
         --seed N --seconds S --trace 0|1
 
 Run from the root of a graft checkout. The first call builds graft and
@@ -25,8 +25,7 @@ import verify
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".bench_build", "perfbench")
-WORKLOADS = ("wordcount", "log_tree", "query_mix")
-SETUPS = 3  # cold JVM + SparkSession starts per run; setup_s uses their median
+WORKLOADS = ("wordcount", "query_mix")
 MIB = 1024.0 * 1024.0
 
 # Spark 4 on JDK 17 needs these outside spark-submit; the same list as
@@ -109,7 +108,8 @@ def jvm(cp, cores, log, args, deadline):
         os.remove(result)
     java = os.path.join(os.environ["JAVA_HOME"], "bin", "java") \
         if os.environ.get("JAVA_HOME") else "java"
-    # a fixed, pre-touched heap keeps peak RSS from following GC timing
+    # a fixed, pre-touched heap keeps run times from following heap-growth
+    # heuristics; peak_heap_mib reports the part of it the work holds
     cmd = [java, *ADD_OPENS, "-Xms2g", "-Xmx2g", "-XX:+AlwaysPreTouch",
            f"-Djava.io.tmpdir={WORK}/tmp", "-cp", cp, "graft.perfbench.Main",
            "--work", WORK, "--result", result, "--cores", str(cores), *args]
@@ -152,19 +152,25 @@ def wall_s(workload, ops):
     return statistics.median(lat)
 
 
-def end_to_end(workload, ops, setups, warm_up, rss, manifest):
+def latencies(ops):
+    """Per-operation latency as the harness timed it, leaving out the
+    query mix's first dedup-ladder query of each pass: it pays the shared
+    signature build, counts in wall_s, and is reported on its own as
+    singleflight.first_ladder_s."""
+    return [o["wall_s"] for o in ops if not o["first_ladder"]]
+
+
+def end_to_end(workload, ops, setup, rss, heap, manifest):
     wall = wall_s(workload, ops)
-    # per-query latency without the shared-build seconds the query paid,
-    # as graft's own drift gate splits it; the builds count in wall_s
-    own = [o["wall_s"] - o["build_s"] for o in ops]
+    lat = latencies(ops)
     return {
-        # cold starts (median) plus the measured JVM's untimed warm-up
-        "setup_s": (statistics.median(setups) + warm_up, "s"),
+        "setup_s": (setup, "s"),
         "wall_s": (wall, "s"),
         "input_mib_per_s": (manifest["bytes"] / MIB / wall, "MiB/s"),
-        "query_p50_s": (pct(own, 0.5), "s"),
-        "query_p80_s": (pct(own, 0.8), "s"),
+        "query_p50_s": (pct(lat, 0.5), "s"),
+        "query_p80_s": (pct(lat, 0.8), "s"),
         "peak_rss_mib": (rss, "MiB"),
+        "peak_heap_mib": (heap, "MiB"),
     }
 
 
@@ -199,15 +205,17 @@ def self_times(o):
     return st
 
 
-def per_layer(workload, ops, cores, manifest):
-    """Per-layer means per operation, and the mean self-time split."""
+def per_layer(workload, ops, cores):
+    """Per-layer means per operation, the mean self-time split, and the
+    mean time of each timed call into graft."""
     n = len(ops)
-    m, report = {}, {}
+    m, report, calls = {}, {}, {}
     for o in ops:
         e, st = o["engine"], self_times(o)
         vals = {
             "sources.list_s": st["sources"],
             "sources.list_tasks": e["list_tasks"],
+            "sources.files": o["files"],
             "sources.scan_tasks": e["scan_tasks"],
             "sources.input_mib": e["input_bytes"] / MIB,
             "plan.plan_s": e["plan_s"],
@@ -232,13 +240,16 @@ def per_layer(workload, ops, cores, manifest):
             m[k] = m.get(k, 0.0) + v / n
         for k, v in st.items():
             report[k] = report.get(k, 0.0) + v / n
-    m["sources.files"] = manifest["files"]
+        for k, v in o["calls"].items():
+            calls[f"operators.{k}_s"] = calls.get(f"operators.{k}_s", 0.0) + v / n
+    first = [o["wall_s"] for o in ops if o["first_ladder"]]
+    m["singleflight.first_ladder_s"] = statistics.median(first) if first else 0.0
     m["exec.core_util"] = m["exec.task_run_s"] * n / (
         sum(o["wall_s"] for o in ops) * cores)
     # the statistic of the untraced wall_s, so the difference is the
     # tracing overhead
     m["trace.wall_s"] = wall_s(workload, ops)
-    return m, report
+    return m, report, calls
 
 
 UNITS = {"_s": "s", "_mib": "MiB", "_util": "ratio"}
@@ -268,15 +279,10 @@ def main():
     verify.clear(out)
     base = ["--workload", a.workload, "--input", data, "--out", out,
             "--seed", str(a.seed), "--trace", str(a.trace)]
-    deadline = time.time() + 150
-    setups = []
-    for i in range(SETUPS - 1):
-        s, _, _ = jvm(cp, cores, os.path.join(WORK, "logs", f"setup-{i}.log"),
-                      base + ["--seconds", "0", "--setup-only"], deadline)
-        setups.append(s)
-    s, rss, obs = jvm(cp, cores, os.path.join(WORK, "logs", f"{a.workload}.log"),
-                      base + ["--seconds", str(a.seconds)], deadline)
-    setups.append(s)
+    start, rss, obs = jvm(cp, cores, os.path.join(WORK, "logs", f"{a.workload}.log"),
+                          base + ["--seconds", str(a.seconds)], time.time() + 150)
+    # cold start until the SparkSession is ready, plus the untimed warm-up
+    setup = start + obs["warm_up_s"]
     ops = obs["ops"]
     failures = verify.check(a.workload, ops, manifest, data, out)
     failed = sum(1 for o in ops if not o["ok"] or o["name"] in failures)
@@ -286,13 +292,15 @@ def main():
         if not o["ok"]:
             print(f"FAILED {o['name']}: {o['error']}")
     if a.trace:
-        metrics, report = per_layer(a.workload, ops, cores, manifest)
+        metrics, report, calls = per_layer(a.workload, ops, cores)
         metrics = {k: (v, unit(k)) for k, v in metrics.items()}
         print("trace report, mean self-time per operation (s): " +
               json.dumps({k: round(v, 4) for k, v in report.items()}))
+        print("trace report, mean time of each timed call per operation (s): " +
+              json.dumps({k: round(v, 4) for k, v in calls.items()}))
     else:
-        metrics = end_to_end(a.workload, ops, setups, obs["warm_up_s"], rss,
-                             manifest)
+        metrics = end_to_end(a.workload, ops, setup, rss,
+                             obs["peak_heap_bytes"] / MIB, manifest)
     verify.clear(out)
     for k, (v, u) in sorted(metrics.items()):
         print(f"{a.workload:10s} {k:24s} {v:14.6f} {u}")
@@ -300,8 +308,10 @@ def main():
           f"  ({failed} of {len(ops)} operations)")
     print("host " + json.dumps(host))
     art = {"workload": a.workload, "seed": a.seed, "seconds": a.seconds,
-           "trace": a.trace, "host": host, "setups_s": setups,
+           "trace": a.trace, "host": host, "start_s": start,
            "warm_up_s": obs["warm_up_s"],
+           "latencies_s": [[o["name"], o["wall_s"], o["first_ladder"]]
+                           for o in ops],
            "ops": len(ops), "failed": failed,
            "metrics": {k: v for k, (v, _) in metrics.items()}}
     with open(os.path.join(WORK, "logs",

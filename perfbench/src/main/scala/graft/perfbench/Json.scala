@@ -30,17 +30,19 @@ object Json {
     "list_s" -> o.listS.toString, "sink_s" -> o.sinkS.toString,
     "sink_span" -> s"[${o.sinkSpan._1},${o.sinkSpan._2}]",
     "span" -> s"[${o.span._1},${o.span._2}]",
-    "out" -> str(o.outDir),
+    "out" -> str(o.outDir), "files" -> o.files.toString,
+    "first_ladder" -> o.firstLadder.toString,
     "calls" -> obj(o.calls.toSeq.map { case (k, v) => k -> v.toString }),
   ) ++ o.engine.map(e => "engine" -> engine(e)))
 
   def strings(kv: Seq[(String, String)]): String =
     obj(kv.map { case (k, v) => k -> str(v) })
 
-  def result(setupEndMs: Long, warmUpS: Double, cores: Int,
-      ops: Seq[Main.Op]): String =
+  def result(setupEndMs: Long, warmUpS: Double, peakHeapBytes: Long,
+      cores: Int, ops: Seq[Main.Op]): String =
     obj(Seq("setup_end_ms" -> setupEndMs.toString,
-      "warm_up_s" -> warmUpS.toString, "cores" -> cores.toString,
+      "warm_up_s" -> warmUpS.toString,
+      "peak_heap_bytes" -> peakHeapBytes.toString, "cores" -> cores.toString,
       "ops" -> ops.map(op).mkString("[", ",", "]"))) + "\n"
 
   /** Order-independent digest of a query answer: SHA-256 over the sorted

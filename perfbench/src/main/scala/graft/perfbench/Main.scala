@@ -8,14 +8,10 @@ import scala.jdk.CollectionConverters._
 import scala.util.Random
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.{Registry, SingleFlight}
-import graft.operators.{Relational, WordCount}
-import graft.plans.StageAggregator
-import graft.plans.StageAggregator.ProgressEvent
-import graft.sources.LogFiles
+import graft.operators.WordCount
 
 /** One benchmark workload in its own JVM: build the session, warm up,
   * then run a closed loop (one call at a time) of timed operations for
@@ -24,19 +20,22 @@ import graft.sources.LogFiles
   * go to a JSON file; metrics and correctness are computed from it by
   * `run.py`.
   *
-  * Usage: Main --workload wordcount|log_tree|query_mix --input DIR
+  * Usage: Main --workload wordcount|query_mix --input DIR
   *   --out DIR --work DIR --result FILE --seconds S --trace 0|1
-  *   --cores N --seed N [--setup-only]
+  *   --cores N --seed N
   */
 object Main {
 
   final case class Opts(workload: String, input: String, out: String,
       work: String, result: String, seconds: Double, trace: Boolean,
-      cores: Int, seed: Long, setupOnly: Boolean)
+      cores: Int, seed: Long)
 
   /** One timed operation. `calls` holds the seconds of each named call
     * into graft, including the action that completes it; `span` and
-    * `sinkSpan` are epoch-ms intervals the trace report splits. */
+    * `sinkSpan` are epoch-ms intervals the trace report splits. `files`
+    * counts the input files the operation's plans read (traced runs);
+    * `firstLadder` marks the query mix's first dedup-ladder query of a
+    * pass, the one that pays the shared builds. */
   final class Op(val name: String) {
     var wallS = 0.0
     var ok = true
@@ -47,6 +46,8 @@ object Main {
     var sinkSpan = (0L, 0L)
     var span = (0L, 0L)
     var outDir = ""
+    var files = 0
+    var firstLadder = false
     val calls = ArrayBuffer.empty[(String, Double)]
     var engine: Option[EngineDelta] = None
   }
@@ -59,7 +60,7 @@ object Main {
       throw new IllegalArgumentException(s"missing --$k"))
     Opts(need("workload"), need("input"), need("out"), need("work"),
       need("result"), need("seconds").toDouble, need("trace") == "1",
-      need("cores").toInt, need("seed").toLong, args.contains("--setup-only"))
+      need("cores").toInt, need("seed").toLong)
   }
 
   private def session(o: Opts): SparkSession = {
@@ -83,50 +84,53 @@ object Main {
     val setupEndMs = System.currentTimeMillis()
     log("session ready")
     val ops = ArrayBuffer.empty[Op]
-    var warmUpS = 0.0
-    if (!o.setupOnly) {
-      val base = spark
-      val runOp: Int => Op = o.workload match {
-        case "wordcount" => wordCountOp(spark, o, _)
-        case "log_tree" => logTreeOp(spark, o, _)
-        case "query_mix" => i => {
-          if (i >= 0 && i % QueryMix.size == 0) {
-            // each timed pass over the mix in a new session (sharing the
-            // SparkContext), so each pass pays the session-keyed shared
-            // builds again
-            tracer.foreach(_.detach())
-            spark = base.newSession()
-            tracer = tracer.map(_ => new Tracer(spark))
-            tracer.foreach(_.attach())
-          }
-          queryMixOp(spark, o, i)
+    HeapWatch.start()
+    val base = spark
+    val runOp: Int => Op = o.workload match {
+      case "wordcount" => wordCountOp(spark, o, _)
+      case "query_mix" => i => {
+        if (i >= 0 && i % QueryMix.size == 0) {
+          // each timed pass over the mix in a new session (sharing the
+          // SparkContext), so each pass pays the session-keyed shared
+          // builds again
+          tracer.foreach(_.detach())
+          spark = base.newSession()
+          tracer = tracer.map(_ => new Tracer(spark))
+          tracer.foreach(_.attach())
         }
-        case w => throw new IllegalArgumentException(s"unknown workload $w")
+        queryMixOp(spark, o, i)
       }
-      // Untimed warm-up, so the timed loop measures warm code: a fixed
-      // amount of work, two iterations or one pass over the query mix.
-      // Its time is reported with the set-up.
-      val (warmOps, step) =
-        if (o.workload == "query_mix") (QueryMix.size, QueryMix.size) else (2, 1)
-      val w0 = System.nanoTime()
-      (-warmOps until 0).foreach(runOp)
-      warmUpS = (System.nanoTime() - w0) / 1e9
-      log(s"warm-up: $warmOps operations")
-      tracer = if (o.trace) Some(new Tracer(spark)) else None
-      tracer.foreach(_.attach())
-      // whole steps (whole passes over the query mix) until the time is
-      // up, and at least three of them, so a median has a middle
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < 3 * step || (System.nanoTime() - t0) / 1e9 < o.seconds) {
-        (i until i + step).foreach(j => ops += runOp(j))
-        i += step
-      }
-      tracer.foreach(_.detach())
-      log(s"timed loop: ${ops.size} operations")
+      case w => throw new IllegalArgumentException(s"unknown workload $w")
     }
+    // Untimed warm-up, so the timed loop measures warmer code: a fixed
+    // amount of work, four iterations or two passes over the query mix.
+    // Its time is reported with the set-up.
+    val (warmOps, step) =
+      if (o.workload == "query_mix") (2 * QueryMix.size, QueryMix.size) else (4, 1)
+    if (o.workload == "query_mix") {
+      Files.createDirectories(Paths.get(o.out))
+      Files.write(Paths.get(s"${o.out}/oracle.json"), Json.strings(
+        queryMix.flatMap(q => q.oracle.map(q.name -> _))).getBytes(StandardCharsets.UTF_8))
+    }
+    val w0 = System.nanoTime()
+    (-warmOps until 0).foreach(runOp)
+    val warmUpS = (System.nanoTime() - w0) / 1e9
+    log(s"warm-up: $warmOps operations")
+    tracer = if (o.trace) Some(new Tracer(spark)) else None
+    tracer.foreach(_.attach())
+    // whole steps (whole passes over the query mix) until the time is
+    // up, and at least four of them
+    val t0 = System.nanoTime()
+    var i = 0
+    while (i < 4 * step || (System.nanoTime() - t0) / 1e9 < o.seconds) {
+      (i until i + step).foreach(j => ops += runOp(j))
+      i += step
+    }
+    tracer.foreach(_.detach())
+    log(s"timed loop: ${ops.size} operations")
     Files.write(Paths.get(o.result),
-      Json.result(setupEndMs, warmUpS, o.cores, ops.toSeq).getBytes(StandardCharsets.UTF_8))
+      Json.result(setupEndMs, warmUpS, HeapWatch.peakBytes, o.cores, ops.toSeq)
+        .getBytes(StandardCharsets.UTF_8))
     spark.stop()
   }
 
@@ -180,68 +184,18 @@ object Main {
   private def wordCountOp(spark: SparkSession, o: Opts, i: Int): Op = {
     val op = new Op(s"iter-$i")
     op.outDir = s"${o.out}/iter-$i"
+    var docs: DataFrame = null
     run(op) {
       val t0 = System.nanoTime()
-      val docs = spark.read.text(s"${o.input}/corpus")
+      docs = spark.read.text(s"${o.input}/corpus")
         .withColumnRenamed("value", "text")
       op.listS = (System.nanoTime() - t0) / 1e9
       timed(op, "word_count") {
         sink(op)(WordCount.writeTsv(WordCount.wordCount(docs), op.outDir))
       }
     }
-  }
-
-  /** The log-analytics chain over a MapReduceLog tree: CPU trends
-    * (collected), then per-run stage times with run dimensions (the CSV
-    * sink) and the best slowstart per dataset (collected). */
-  private def logTreeOp(spark: SparkSession, o: Opts, i: Int): Op = {
-    import spark.implicits._
-    val root = s"${o.input}/MapReduceLog"
-    val op = new Op(s"iter-$i")
-    op.outDir = s"${o.out}/iter-$i"
-    var trends = Array.empty[org.apache.spark.sql.Row]
-    var best = Array.empty[org.apache.spark.sql.Row]
-    run(op) {
-      trends = timed(op, "cpu_trends") {
-        val df = LogFiles.cpuTrends(spark, root)
-        if (o.trace) df.queryExecution.executedPlan
-        df.collect()
-      }
-      val t0 = System.nanoTime()
-      val paths = LogFiles.globPaths(spark, s"$root/*/job_output.log") ++
-        LogFiles.globPaths(spark, s"$root/*/*/job_output.log")
-      op.listS += (System.nanoTime() - t0) / 1e9
-      val perRun = timed(op, "stage_times") {
-        val events = LogFiles.progressEvents(LogFiles.readLines(spark, paths: _*))
-          .select(col("file").as("run"), unix_timestamp(col("ts")).as("epochS"),
-            col("map_pct").as("mapPct"), col("red_pct").as("redPct"))
-          .as[ProgressEvent]
-        val df = LogFiles.withRunDims(
-          StageAggregator.stageTimes(events).toDF("file", "st"))
-          .select(col("dataset"), col("slowstart"), col("run_ts"),
-            col("st.totalS").as("total_s"), col("st.mapS").as("map_s"),
-            col("st.shuffleS").as("shuffle_s"), col("st.reduceS").as("reduce_s"),
-            col("st.overlapPct").as("overlap_pct"))
-        sink(op)(Relational.writeResultCsv(df, s"${op.outDir}/stages"))
-        df
-      }
-      best = timed(op, "best_param") {
-        val means = perRun.groupBy("dataset", "slowstart")
-          .agg(avg(col("total_s")).as("mean_total_s"))
-        val df = Relational.bestParamTies(means, "dataset", "slowstart",
-          "mean_total_s", asc = true)
-        if (o.trace) df.queryExecution.executedPlan
-        df.collect()
-      }
-    }
-    if (op.ok) {
-      Files.createDirectories(Paths.get(op.outDir))
-      Files.write(Paths.get(s"${op.outDir}/trends.tsv"), trends.map(r =>
-        Seq(r.getString(0), r.getDouble(1), r.getInt(2), r.getDouble(3))
-          .mkString("\t")).toSeq.asJava)
-      Files.write(Paths.get(s"${op.outDir}/best.tsv"),
-        best.map(r => s"${r.getString(0)}\t${r.getString(1)}").toSeq.asJava)
-    }
+    // untimed; it analyses the plan again but runs no job
+    if (o.trace && op.ok) op.files = docs.inputFiles.length
     op
   }
 
@@ -255,6 +209,8 @@ object Main {
     "a5_stage_detect", "a7_durations", "a8_overlap", "g2_minhash_sig",
     "g2_minhash_pairs", "g21_lsh_bucket_census")
 
+  private def isLadder(name: String): Boolean = name.startsWith("g")
+
   def queryMix: Seq[graft.Q] = {
     val byName = Registry.all.map(q => q.name -> q).toMap
     QueryMix.map(byName)
@@ -264,39 +220,40 @@ object Main {
   private val firstDigest = scala.collection.mutable.Map.empty[String, String]
 
   /** The `i`-th query of a closed loop over the query mix, in an order
-    * the seed and the pass number permute; the warm-up pass has negative
-    * `i`. One operation ends when the query's rows are collected. The
-    * first answer of each query is saved as parquet, with its oracle SQL,
-    * for the DuckDB check; every later answer must match it. */
+    * the seed and the pass number permute; the warm-up passes have
+    * negative `i`. One operation ends when the query's rows are
+    * collected. The first answer of each query is saved as parquet (the
+    * oracle SQL is saved before the warm-up) for the DuckDB check; every
+    * later answer must match it. */
   private def queryMixOp(spark: SparkSession, o: Opts, i: Int): Op = {
     val pass = Math.floorDiv(i, QueryMix.size)
     val order = new Random(o.seed * 1000003L + pass).shuffle(queryMix)
     val q = order(Math.floorMod(i, QueryMix.size))
-    if (i == -QueryMix.size) {
-      Files.createDirectories(Paths.get(o.out))
-      Files.write(Paths.get(s"${o.out}/oracle.json"), Json.strings(
-        queryMix.flatMap(q => q.oracle.map(q.name -> _))).getBytes(StandardCharsets.UTF_8))
-    }
     val op = new Op(q.name)
+    // the ladder queries share the session's signature build (and
+    // g2_minhash_pairs the candidate build on top of it); known from the
+    // pass order, not from graft
+    val k = Math.floorMod(i, QueryMix.size)
+    op.firstLadder = isLadder(q.name) && !order.take(k).exists(p => isLadder(p.name))
     val b0 = SingleFlight.buildSecondsTotal
     var rows = Array.empty[org.apache.spark.sql.Row]
-    var schema: org.apache.spark.sql.types.StructType = null
+    var df: DataFrame = null
     run(op) {
       timed(op, "query") {
-        val df = q.run(spark, s"${o.input}/tables")
+        df = q.run(spark, s"${o.input}/tables")
         if (o.trace) df.queryExecution.executedPlan
-        schema = df.schema
         // the rows collected to the client are this query's sink
         sink(op) { rows = df.collect() }
       }
     }
     op.buildS = SingleFlight.buildSecondsTotal - b0
+    if (o.trace && op.ok) op.files = df.inputFiles.length
     if (op.ok) {
       val digest = Json.digest(rows.iterator.map(_.toString))
       firstDigest.get(q.name) match {
         case None =>
           firstDigest(q.name) = digest
-          spark.createDataFrame(rows.toSeq.asJava, schema)
+          spark.createDataFrame(rows.toSeq.asJava, df.schema)
             .coalesce(1).write.mode("overwrite").parquet(s"${o.out}/${q.name}")
         case Some(d) if d != digest =>
           op.ok = false

@@ -49,11 +49,9 @@ class GeneratorTest(unittest.TestCase):
                 self.assertEqual(ma, mb)
 
     def test_seed_changes_inputs(self):
-        for w in ("wordcount", "log_tree"):
-            with self.subTest(workload=w):
-                a, _ = self.digest(w, 7, f"{w}-a")
-                b, _ = self.digest(w, 8, f"{w}-b")
-                self.assertNotEqual(a, b)
+        a, _ = self.digest("wordcount", 7, "wordcount-a")
+        b, _ = self.digest("wordcount", 8, "wordcount-b")
+        self.assertNotEqual(a, b)
 
 
 if __name__ == "__main__":

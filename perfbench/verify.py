@@ -30,31 +30,6 @@ def check_wordcount(o, m):
     return None if got == want else f"(tokens, distinct, digest) {got} != {want}"
 
 
-def check_log_tree(o, m):
-    d = o["out"]
-    with open(f"{d}/trends.tsv") as fh:
-        trends = sorted([r[0], float(r[1]), int(r[2]), float(r[3])]
-                        for r in csv.reader(fh, delimiter="\t"))
-    if trends != m["trends"]:
-        return f"cpu trends differ ({len(trends)} rows, {len(m['trends'])} expected)"
-    with open(f"{d}/best.tsv") as fh:
-        best = dict(csv.reader(fh, delimiter="\t"))
-    if best != m["best"]:
-        return f"best slowstart {best} != {m['best']}"
-    stages = []
-    for part in glob.glob(f"{d}/stages/*.csv"):
-        with open(part, newline="") as fh:
-            rows = list(csv.reader(fh))
-        if rows[0] != ["dataset", "slowstart", "run_ts", "total_s", "map_s",
-                       "shuffle_s", "reduce_s", "overlap_pct"]:
-            return f"stage CSV header {rows[0]}"
-        stages += [[r[0], float(r[1]), r[2]] + [float(x) for x in r[3:]]
-                   for r in rows[1:]]
-    if sorted(stages) != m["stages"]:
-        return f"stage times differ ({len(stages)} rows, {len(m['stages'])} expected)"
-    return None
-
-
 def _norm(df):
     df = df.reindex(sorted(df.columns), axis=1)
     return df.sort_values(by=list(df.columns), ignore_index=True)
@@ -131,11 +106,10 @@ def check_query_mix(ops, data, out):
 def check(workload, ops, manifest, data, out):
     if workload == "query_mix":
         return check_query_mix(ops, data, out)
-    fn = check_wordcount if workload == "wordcount" else check_log_tree
     wrong = {}
     for o in ops:
         if o["ok"]:
-            why = fn(o, manifest)
+            why = check_wordcount(o, manifest)
             if why:
                 wrong[o["name"]] = why
         clear(o["out"])
