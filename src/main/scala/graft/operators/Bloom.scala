@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.functions.Parity.pround
+import graft.plans.Md5Long56.md5Long56
 
 /** Bloom-filter join prefiltering — the explicit, engine-portable form
   * of a runtime filter: build a tiny bit set from the selective build
@@ -34,7 +35,7 @@ import graft.functions.Parity.pround
   */
 object Bloom {
 
-  import Dedup.{md5Long56, affinePerm}
+  import Dedup.affinePerm
 
   /** Bits in the filter (2^16 — 8 KiB as a real bitmap). */
   val BloomBits = 65536
@@ -42,7 +43,7 @@ object Bloom {
   /** Hash count (k): positions 0..k-1 per key. */
   val BloomK = 3
 
-  private def hExpr(keyCol: String) = md5Long56(s"cast($keyCol as string)")
+  private def keyHash(keyCol: String) = md5Long56(expr(s"cast($keyCol as string)"))
 
   /** The k bloom positions over a column named `h`, as an array expr. */
   private def posArray: String =
@@ -51,7 +52,7 @@ object Bloom {
 
   /** Distinct bit positions set by the build side's keys. */
   def buildBits(build: DataFrame, keyCol: String): DataFrame =
-    build.select(expr(hExpr(keyCol)).as("h"))
+    build.select(keyHash(keyCol).as("h"))
       .select(explode(expr(posArray)).as("pos"))
       .distinct()
 
@@ -68,7 +69,7 @@ object Bloom {
                      probe: DataFrame, probeKey: String): DataFrame = {
     val bits = buildBits(build, buildKey).withColumn("bset", lit(1))
     val probeKeys = probe.select(col(probeKey).as("k")).distinct()
-      .select(col("k"), expr(hExpr("k")).as("h"))
+      .select(col("k"), keyHash("k").as("h"))
       .select(col("k"), expr(s"array_distinct($posArray)").as("ps"))
     // distinct already hash-partitioned the keys on k, and explode
     // preserves that, so the groupBy below reuses the partitioning —

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.functions.Parity.pround
+import graft.plans.Md5Long56.md5Long56
 
 /** Benchmark decontamination (SURVEY.md §2.G [EXT] extension): measure
   * n-gram overlap between the training split and a held-out eval split —
@@ -25,9 +26,9 @@ import graft.functions.Parity.pround
   */
 object Contamination {
 
-  import Dedup.{md5Long56, shingleHashRows}
+  import Dedup.shingleHashRows
 
-  private val pctExpr = s"${md5Long56("cast(doc_id as string)")} % 100"
+  private def pctHash = md5Long56(expr("cast(doc_id as string)")) % 100
 
   /** Per-eval-doc contamination: distinct-shingle count, how many of
     * them occur anywhere in the train split, and the overlap ratio. */
@@ -41,8 +42,8 @@ object Contamination {
     * instead of re-shingling the corpus twice. */
   private[graft] def contaminationFromShingles(shingles: DataFrame,
       evalPct: Int): DataFrame = {
-    val evalSh = shingles.where(expr(pctExpr) >= 100 - evalPct)
-    val trainSh = shingles.where(expr(pctExpr) < 100 - evalPct)
+    val evalSh = shingles.where(pctHash >= 100 - evalPct)
+    val trainSh = shingles.where(pctHash < 100 - evalPct)
       .select("sh_h").distinct()
     val perDoc = evalSh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
     val hit = evalSh.join(trainSh, Seq("sh_h"), "left_semi")

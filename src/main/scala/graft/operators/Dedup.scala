@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.functions.Parity.pround
+import graft.plans.Md5Long56.md5Long56
 
 /** Deduplication operators for large-scale training-data pipelines
   * (SURVEY.md §2.G [EXT]): exact, MinHash+LSH banding, SimHash, and
@@ -68,7 +69,7 @@ object Dedup {
     * md5 keeps it engine-portable. Collision odds ≈ 2^-56 per pair. */
   def shingleHashRows(docs: DataFrame): DataFrame =
     shingleRows(docs).select(col("doc_id"),
-      expr(md5Long56("sh")).as("sh_h"))
+      md5Long56(col("sh")).as("sh_h"))
 
   /** G1: exact dedup on whitespace-normalized lowercased text; survivor =
     * min doc_id per group. */
@@ -85,16 +86,6 @@ object Dedup {
 
   /** Offset mixer for the affine family (Knuth's 2^32 golden ratio). */
   val MinhashMixer = 2654435761L
-
-  /** SQL fragment: 56-bit md5-prefix long of string column/expr `c` — the
-    * engine-portable hash (DuckDB mirror: ('0x'||substr(md5(c),1,14))::BIGINT).
-    * r20: emits the native [[graft.plans.Md5Long56]] expression (registered
-    * by GraftExtensions in every first-party session — Bench/Verify/
-    * ProfileQuery/specs), bit-identical to the former composed form
-    * `cast(conv(substr(md5(c), 1, 14), 16, 10) as bigint)` but with no
-    * per-row hex encode / substring / radix re-parse — this fragment is
-    * the per-shingle kernel of every corpus-scale dedup pass. */
-  def md5Long56(c: String): String = s"md5_long56($c)"
 
   /** SQL fragment: the j-th affine permutation of non-negative long `h`.
     * The per-band offset is XOR-mixed into `h` BEFORE the mod so two
@@ -436,7 +427,7 @@ object Dedup {
   def dedupRecallCensus(docs: DataFrame, clusters: DataFrame): DataFrame = {
     val lbl = docs
       .select(col("doc_id"),
-        expr(md5Long56("lower(trim(regexp_replace(text, '[ \\t\\n\\r\\f]+', ' ')))"))
+        md5Long56(expr("lower(trim(regexp_replace(text, '[ \\t\\n\\r\\f]+', ' ')))"))
           .as("g"))
       .join(clusters, Seq("doc_id"), "left")
       .select(col("g"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
@@ -805,8 +796,8 @@ object Dedup {
     * collect, no driver round-trip, and the identical-subtree df
     * exchange is deduplicated by runtime exchange reuse. `fixedCap`
     * (the per-call override and the env-ceiling escape hatch) bypasses
-    * the derivation entirely — that is the pre-r16 behavior, kept for
-    * diagnostics (CapDiag ladders) and specs that pin exact caps. */
+    * the derivation entirely — that is the pre-r16 behavior, which
+    * specs also use to pin exact caps. */
   private[graft] def autoCapped(tbl: DataFrame, keys: Seq[String],
       fixedCap: Option[Int] = None,
       ceilCap: Int = DefaultShingleDfCap,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.functions.Parity.pround
+import graft.plans.Md5Long56.md5Long56
 
 /** Sequence-assembly operators for LLM training pipelines (SURVEY.md
   * §2.G [EXT] extension): packing documents into fixed-token-budget
@@ -148,7 +149,7 @@ object Packing {
     val toks = docs
       .select(col("doc_id"), posexplode(expr(Dedup.tokensExpr)).as(Seq("pos0", "w")))
       .select(col("doc_id"), (col("pos0") + 1).as("pos"),
-        when(expr(s"${Dedup.md5Long56("w")} % $modulus") === 0, 1L)
+        when(md5Long56(col("w")) % modulus === 0, 1L)
           .otherwise(0L).as("b"))
     // a boundary token BELONGS to the chunk it closes: count boundaries
     // strictly before each position
@@ -273,8 +274,7 @@ object Packing {
   def shardBalance(docs: DataFrame, nShards: Int = DefaultShards): DataFrame = {
     val per = docs
       .select(
-        expr(s"${Dedup.md5Long56("cast(doc_id as string)")} % $nShards")
-          .as("shard"),
+        (md5Long56(expr("cast(doc_id as string)")) % nShards).as("shard"),
         expr(s"size(${Dedup.tokensExpr})").cast("long").as("toks"))
       .groupBy("shard")
       .agg(count(lit(1)).as("docs"), sum("toks").as("toks"))
@@ -299,7 +299,7 @@ object Packing {
     * expectation comes from the |sources| count table. */
   def shuffleQuality(docs: DataFrame, nShards: Int = DefaultShards): DataFrame = {
     val keyed = docs.select(col("doc_id"), col("source"),
-        expr(Dedup.md5Long56("cast(doc_id as string)")).as("h"))
+        md5Long56(expr("cast(doc_id as string)")).as("h"))
       .select(col("doc_id"), col("source"),
         (col("h") % nShards).as("shard"), expr(s"h div $nShards").as("r"))
     val w = Window.partitionBy("shard").orderBy(col("r"), col("doc_id"))

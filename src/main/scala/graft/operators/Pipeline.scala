@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.functions.Parity.pround
+import graft.plans.Md5Long56.md5Long56
 
 /** End-to-end training-data pipeline composition — the proof that the
   * operator library COMPOSES: one declarative plan that deduplicates,
@@ -29,7 +30,6 @@ import graft.functions.Parity.pround
   */
 object Pipeline {
 
-  import Dedup.md5Long56
 
   /** Per-survivor metric rows: one row per unique normalized text that
     * passes every bar, carrying the metrics the bars were judged on.
@@ -158,8 +158,8 @@ object Pipeline {
     curateSurvivors(docs, minTokens, vocabK, maxOov, minTtr, maxTopBigram,
         materialize)
       .withColumn("split",
-        when(expr(s"${md5Long56("cast(doc_id as string)")} % 10") < 8, lit("train"))
-          .when(expr(s"${md5Long56("cast(doc_id as string)")} % 10") === 8, lit("val"))
+        when(md5Long56(expr("cast(doc_id as string)")) % 10 < 8, lit("train"))
+          .when(md5Long56(expr("cast(doc_id as string)")) % 10 === 8, lit("val"))
           .otherwise(lit("test")))
       .groupBy("split", "lang")
       .agg(count(lit(1)).as("n_docs"),

@@ -1,11 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.functions.Parity.pround
+import graft.plans.Md5Long56.md5Long56
 
 /** Deterministic sampling operators for training-data pipelines
   * (SURVEY.md §2.G [EXT] extension): Bernoulli-by-hash sampling,
@@ -27,15 +28,19 @@ import graft.functions.Parity.pround
   */
 object Sampling {
 
-  import Dedup.md5Long56
-
   /** Portable uniform hash of doc_id in [0, 100). */
-  private val pctExpr = s"${md5Long56("cast(doc_id as string)")} % 100"
+  private def pctHash = md5Long56(expr("cast(doc_id as string)")) % 100
+
+  /** u in (0,1): the 56-bit hash of `key` midpoint-normalized, so ln(u)
+    * is finite. 0.5 and 2^56 are exact doubles, so these Double literals
+    * give the same u as the oracle SQL's DECIMAL ones. */
+  private def md5Uniform(key: String): Column =
+    (md5Long56(expr(key)).cast("double") + 0.5) / 72057594037927936.0
 
   /** Bernoulli-by-hash sample: keep rows whose id-hash falls under
     * `pct`. Map-only; rate is exact in expectation and deterministic. */
   def hashSample(docs: DataFrame, pct: Int): DataFrame =
-    docs.where(expr(pctExpr) < pct)
+    docs.where(pctHash < pct)
       .select("doc_id", "lang", "source", "n_chars")
 
   /** x11: deterministic WEIGHTED sample without replacement, the
@@ -47,12 +52,10 @@ object Sampling {
     * global sort — so the pass is one scan at any scale. Rows with
     * non-positive weight are excluded (their key would be ±inf). */
   def weightedSample(docs: DataFrame, weightCol: String, k: Int): DataFrame = {
-    val h = md5Long56("cast(doc_id as string)")
-    // u in (0,1): the 56-bit hash midpoint-normalized so ln(u) is finite
-    val key = s"-ln((cast($h as double) + 0.5) / 72057594037927936.0)" +
-      s" / cast($weightCol as double)"
+    val key = -ln(md5Uniform("cast(doc_id as string)")) /
+      col(weightCol).cast("double")
     docs.where(col(weightCol) > 0)
-      .select(col("doc_id"), col(weightCol).as("w"), expr(key).as("es_key"))
+      .select(col("doc_id"), col(weightCol).as("w"), key.as("es_key"))
       .orderBy(col("es_key"), col("doc_id")).limit(k)
       .select(col("doc_id"), col("w"), pround(col("es_key"), 9).as("es_key"))
   }
@@ -68,7 +71,7 @@ object Sampling {
     * PSI > 0.2 is the conventional alarm). One groupBy on the bin plus
     * a 1-row totals broadcast. */
   def psiDrift(docs: DataFrame, bins: Int = 10, binWidth: Int = 100): DataFrame = {
-    val split = expr(s"$pctExpr % 10")
+    val split = pctHash % 10
     val counts = docs.select(
         least(floor(col("n_chars") / binWidth), lit(bins - 1))
           .cast("long").as("bin"),
@@ -98,7 +101,7 @@ object Sampling {
     * changes (each phase-1 partition sorts |stratum|/salts rows). */
   def stratifiedSample(docs: DataFrame, stratum: String, n: Int,
                        salts: Int = 64): DataFrame = {
-    val h = expr(md5Long56("cast(doc_id as string)"))
+    val h = md5Long56(expr("cast(doc_id as string)"))
     val pre = Window.partitionBy(col(stratum), (col("doc_id") % salts).as("salt"))
       .orderBy(col("h"), col("doc_id"))
     val fin = Window.partitionBy(stratum).orderBy(col("h"), col("doc_id"))
@@ -129,7 +132,7 @@ object Sampling {
     val sp = docs.sparkSession
     import sp.implicits._
     val w = epochs.toDF(keyCol, "num", "denom")
-    val bucket = expr(s"${md5Long56("concat('mix:', cast(doc_id as string))")} % denom")
+    val bucket = md5Long56(expr("concat('mix:', cast(doc_id as string))")) % col("denom")
     docs.join(broadcast(w), keyCol)
       .withColumn("n_copies",
         expr("num div denom") + (bucket < expr("num % denom")).cast("long"))
@@ -160,7 +163,7 @@ object Sampling {
   def bootstrapCI(docs: DataFrame, valueCol: String = "n_chars",
                   reps: Int = 64): DataFrame = {
     require(reps >= 40, "need ≥40 replicates for a 2.5%/97.5% rank CI")
-    val u = s"(cast(${md5Long56("concat('bs:', cast(doc_id as string), ':', cast(r as string))")} as double) + 0.5) / 72057594037927936.0"
+    val u = md5Uniform("concat('bs:', cast(doc_id as string), ':', cast(r as string))")
     val poisson =
       """CASE WHEN u < 0.36787944117144233 THEN 0L
         | WHEN u < 0.7357588823428847 THEN 1L
@@ -173,7 +176,7 @@ object Sampling {
     val ev = docs
       .select(col("doc_id"), col(valueCol).cast("long").as("v"),
         explode(expr(s"sequence(0, ${reps - 1})")).as("r"))
-      .withColumn("u", expr(u))
+      .withColumn("u", u)
       .withColumn("w", expr(poisson))
     val repMeans = ev.groupBy("r")
       .agg(sum(col("w") * col("v")).as("ws"), sum(col("w")).as("wn"))
@@ -239,7 +242,7 @@ object Sampling {
         col("rate"))
     val kept = docs
       .join(broadcast(rates.select(col("lang"), col("rate"))), Seq("lang"))
-      .where(expr(md5Long56("concat('temp:', cast(doc_id as string))")) <
+      .where(md5Long56(expr("concat('temp:', cast(doc_id as string))")) <
         expr("cast(floor(rate * 72057594037927936.0) as bigint)"))
       .groupBy("lang").agg(count(lit(1)).as("n_sampled"))
     rates.join(kept, Seq("lang"), "left")
@@ -256,8 +259,8 @@ object Sampling {
     * counts — the reproducible split a fine-tuning pipeline snapshots. */
   def splitCounts(docs: DataFrame): DataFrame =
     docs.select(col("lang"), col("doc_id"),
-      when(expr(pctExpr) % 10 < 8, lit("train"))
-        .when(expr(pctExpr) % 10 === 8, lit("val"))
+      when(pctHash % 10 < 8, lit("train"))
+        .when(pctHash % 10 === 8, lit("val"))
         .otherwise(lit("test")).as("split"))
       .groupBy("split", "lang")
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("first_doc"))

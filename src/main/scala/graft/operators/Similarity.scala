@@ -1,12 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.{Q, Tables}
 import graft.functions.Parity.pround
+import graft.plans.FixedDotProduct.fpDot
 
 /** Similarity search over an embedding column (SURVEY.md §2.G [EXT]).
   *
@@ -31,28 +32,16 @@ object Similarity {
   val fixedExpr =
     "transform(embedding, x -> cast(floor(cast(x as double) * 100000.0) as bigint))"
 
-  /** Exact long dot product: the native codegen'd fp_dot expression when
-    * graft.plans.GraftExtensions is installed (Verify/Bench sessions),
-    * otherwise the equivalent — but interpreted, per-row-allocating —
-    * higher-order-function form. Identical results either way. */
-  def dotExpr(s: SparkSession, a: String, b: String): String =
-    if (scala.util.Try(s.catalog.functionExists("fp_dot")).getOrElse(false))
-      s"fp_dot($a, $b)"
-    else
-      s"aggregate(zip_with($a, $b, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
-
   /** Per-vector squared norm of the fixed-point embedding (exact long). */
-  private[operators] def withFixed(vecs: DataFrame): DataFrame = {
-    val dot = dotExpr(vecs.sparkSession, "f", "f")
+  private[operators] def withFixed(vecs: DataFrame): DataFrame =
     vecs.select(col("vec_id"), col("label"), expr(fixedExpr).as("f"))
-      .withColumn("nrm", expr(dot))
-  }
+      .withColumn("nrm", fpDot(col("f"), col("f")))
 
   /** Exact cosine between two fixed-point vectors (columns fa/fb with
     * norms na/nb): long dot / (sqrt·sqrt). */
-  private[operators] def cosExpr(s: SparkSession): String =
-    s"cast(${dotExpr(s, "fa", "fb")} as double)" +
-      " / (sqrt(cast(na as double)) * sqrt(cast(nb as double)))"
+  private[operators] def cosExpr: Column =
+    fpDot(col("fa"), col("fb")).cast("double") /
+      (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double")))
 
   /** Brute-force cosine top-k: queries (tiny) broadcast against all. */
   def cosineTopK(vecs: DataFrame, nQueries: Int, k: Int): DataFrame = {
@@ -64,7 +53,7 @@ object Similarity {
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("neighbor_id"))
     broadcast(queries).join(corpus, col("q_id") =!= col("neighbor_id"))
       .select(col("q_id"), col("neighbor_id"),
-        expr(cosExpr(vecs.sparkSession)).as("cos"))
+        cosExpr.as("cos"))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= k)
       .select(col("q_id"), col("neighbor_id"), col("rn").as("rank"),
@@ -98,7 +87,6 @@ object Similarity {
     * degrades to s1's full scan, never worse. */
   def mipsTopK(vecs: DataFrame, nQueries: Int, k: Int,
                sampleM: Int = 50): DataFrame = {
-    val s = vecs.sparkSession
     val base = withFixed(vecs)
     val queries = base.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("f").as("fa"), col("nrm").as("na"))
@@ -109,7 +97,7 @@ object Similarity {
     val bounds = broadcast(queries)
       .join(broadcast(sample), col("q_id") =!= col("neighbor_id"))
       .select(col("q_id"), col("neighbor_id"),
-        expr(dotExpr(s, "fa", "fb")).as("ip"))
+        fpDot(col("fa"), col("fb")).as("ip"))
       .withColumn("rn", row_number().over(wq))
       .where(col("rn") === k)
       .select(col("q_id"), col("ip").as("lb"))
@@ -122,7 +110,7 @@ object Similarity {
         col("na").cast(dec) * col("nb").cast(dec) >=
           col("lb").cast(dec) * col("lb").cast(dec))
       .select(col("q_id"), col("neighbor_id"),
-        expr(dotExpr(s, "fa", "fb")).as("ip"))
+        fpDot(col("fa"), col("fb")).as("ip"))
     survivors
       .withColumn("rn", row_number().over(wq))
       .where(col("rn") <= k)
@@ -157,11 +145,11 @@ object Similarity {
   /** The p-plane sign-LSH bucket-id column for LSH table `table`, over a
     * fixed-point column `f`: bit_p = (⟨f, w_p⟩ >= 0). The weight vector
     * is a literal array, so each bit is one exact long dot product
-    * (fp_dot when the extension is live) against a constant. */
-  private[operators] def bucketCol(s: SparkSession, planes: Int, table: Int) =
+    * (the native fp_dot) against a constant. */
+  private[operators] def bucketCol(planes: Int, table: Int) =
     concat(planeWeights(table, planes).map { w =>
       val wLit = s"array(${w.mkString("L,")}L)"
-      when(expr(dotExpr(s, "f", s"slice($wLit, 1, size(f))")) >= 0, lit("1"))
+      when(fpDot(col("f"), expr(s"slice($wLit, 1, size(f))")) >= 0, lit("1"))
         .otherwise(lit("0"))
     }.toIndexedSeq: _*)
 
@@ -170,7 +158,7 @@ object Similarity {
     * plane family for multi-table search. */
   def lshBuckets(vecs: DataFrame, planes: Int, table: Int = 0): DataFrame =
     withFixed(vecs).select(col("vec_id"),
-      bucketCol(vecs.sparkSession, planes, table).as("bucket"))
+      bucketCol(planes, table).as("bucket"))
 
   /** Embedding-cosine near-dup pairs, LSH-prefiltered: exact cosine runs
     * only on pairs sharing a sign-LSH bucket (the dedup scale path — the
@@ -184,7 +172,7 @@ object Similarity {
       col("f").as("fb"), col("nrm").as("nb"))
     a.join(b, Seq("bucket")).where(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        expr(cosExpr(vecs.sparkSession)).as("cos"))
+        cosExpr.as("cos"))
       .orderBy(col("cos").desc, col("vec_a"), col("vec_b"))
       .limit(k)
       .select(col("vec_a"), col("vec_b"), pround(col("cos"), 6).as("cos_sim"))
@@ -219,7 +207,7 @@ object Similarity {
     base.select(col("vec_id"), col("f").as("fa"), col("nrm").as("na"))
       .crossJoin(broadcast(cents))
       .select(col("vec_id"), col("centroid_id"), col("fa"), col("na"),
-        expr(cosExpr(vecs.sparkSession)).as("cos"))
+        cosExpr.as("cos"))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") === 1)
       .select(col("vec_id"), col("centroid_id"), col("cos"),
@@ -242,14 +230,13 @@ object Similarity {
     * set joins back by vec_id as a plain hash join (NOT broadcast: the
     * dropped fraction is unbounded, routinely ~50% on web crawl). */
   def semDedup(vecs: DataFrame, nCents: Int, minCos: Double): DataFrame = {
-    val s = vecs.sparkSession
     val assigned = assignFixed(vecs, nCents)
     val a = assigned.select(col("centroid_id"), col("vec_id").as("id_a"),
       col("f").as("fa"), col("nrm").as("na"))
     val b = assigned.select(col("centroid_id"), col("vec_id").as("id_b"),
       col("f").as("fb"), col("nrm").as("nb"))
     val dropped = a.join(b, Seq("centroid_id"))
-      .where(col("id_a") < col("id_b") && expr(cosExpr(s)) >= minCos)
+      .where(col("id_a") < col("id_b") && cosExpr >= minCos)
       .select(col("id_b").as("vec_id")).distinct()
     assigned.select(col("vec_id"), col("centroid_id"))
       .join(dropped.withColumn("__drop", lit(1)), Seq("vec_id"), "left")
@@ -314,14 +301,13 @@ object Similarity {
     * the result, not a guess. */
   def annRecall(vecs: DataFrame, planes: Int, nQueries: Int, k: Int,
                 hamming: Int = 0, tables: Int = 1): DataFrame = {
-    val s = vecs.sparkSession
     val exact = cosineTopK(vecs, nQueries, k)
       .select(col("q_id"), col("neighbor_id"))
     val base = withFixed(vecs)
     // one row per (vector, table) with that table's bucket id — the
     // multi-table LSH index (×tables storage, the classic recall trade)
     val tblBuckets = explode(array((0 until tables).map(t =>
-      struct(lit(t).as("tbl"), bucketCol(s, planes, t).as("bucket"))): _*))
+      struct(lit(t).as("tbl"), bucketCol(planes, t).as("bucket"))): _*))
     val c = base
       .select(col("vec_id").as("neighbor_id"), tblBuckets.as("tb"))
       .select(col("neighbor_id"), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
@@ -343,7 +329,7 @@ object Similarity {
     val cand = candIds
       .join(broadcast(qv), Seq("q_id"))
       .join(nv, Seq("neighbor_id"))
-      .select(col("q_id"), col("neighbor_id"), expr(cosExpr(s)).as("cos"))
+      .select(col("q_id"), col("neighbor_id"), cosExpr.as("cos"))
     val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("neighbor_id"))
     // one candidate subtree, two consumers (top-k and the count) — both
     // partition on q_id, so exchange reuse computes it once at runtime
@@ -510,7 +496,6 @@ object Similarity {
   def ivfPqSearch(vecs: DataFrame, nCents: Int, nQueries: Int,
                   nProbe: Int, k: Int, m: Int = 4,
                   codebookK: Int = 4): DataFrame = {
-    val s = vecs.sparkSession
     val base = withFixed(vecs)
     val cents = base.orderBy("vec_id").limit(nCents)
       .select(col("vec_id").as("centroid_id"), col("f").as("fb"),
@@ -520,7 +505,7 @@ object Similarity {
     val wProbe = Window.partitionBy("q_id")
       .orderBy(col("cos").desc, col("centroid_id"))
     val probes = broadcast(queries).crossJoin(broadcast(cents))
-      .select(col("q_id"), col("centroid_id"), expr(cosExpr(s)).as("cos"))
+      .select(col("q_id"), col("centroid_id"), cosExpr.as("cos"))
       .withColumn("prn", row_number().over(wProbe))
       .where(col("prn") <= nProbe)
       .select(col("q_id"), col("centroid_id"))
@@ -568,7 +553,6 @@ object Similarity {
     * restriction. */
   def ivfRecall(vecs: DataFrame, nCents: Int, nQueries: Int,
                 maxProbe: Int, k: Int): DataFrame = {
-    val s = vecs.sparkSession
     val truth = cosineTopK(vecs, nQueries, k)
       .select(col("q_id"), col("neighbor_id"))
     // r20 (VERDICT r19 item 4): the rungs used to be maxProbe separate
@@ -596,7 +580,7 @@ object Similarity {
       .orderBy(col("cos").desc, col("centroid_id"))
     val probes = broadcast(queries).crossJoin(broadcast(cents))
       .select(col("q_id"), col("centroid_id"), col("fa"), col("na"),
-        expr(cosExpr(s)).as("cos"))
+        cosExpr.as("cos"))
       .withColumn("prn", row_number().over(wProbe))
       .where(col("prn") <= maxProbe)
       .select(col("q_id"), col("centroid_id"), col("prn"),
@@ -606,7 +590,7 @@ object Similarity {
     val runs = broadcast(probes).join(assigned, Seq("centroid_id"))
       .where(col("q_id") =!= col("neighbor_id"))
       .select(col("q_id"), col("neighbor_id"), col("prn"),
-        expr(cosExpr(s)).as("cos"))
+        cosExpr.as("cos"))
       .select(col("q_id"), col("neighbor_id"), col("cos"),
         explode(expr(s"sequence(prn, $maxProbe)")).as("n_probe"))
       .withColumn("rn", row_number().over(wRank))
@@ -689,7 +673,6 @@ object Similarity {
     * q_id over candidate rows only. */
   def ivfSearch(vecs: DataFrame, nCents: Int, nQueries: Int,
                 nProbe: Int, k: Int): DataFrame = {
-    val s = vecs.sparkSession
     val assigned = assignFixed(vecs, nCents)
       .select(col("vec_id").as("neighbor_id"), col("centroid_id"),
         col("f").as("fb"), col("nrm").as("nb"))
@@ -703,7 +686,7 @@ object Similarity {
       .orderBy(col("cos").desc, col("centroid_id"))
     val probes = broadcast(queries).crossJoin(broadcast(cents))
       .select(col("q_id"), col("centroid_id"), col("fa"), col("na"),
-        expr(cosExpr(s)).as("cos"))
+        cosExpr.as("cos"))
       .withColumn("prn", row_number().over(wProbe))
       .where(col("prn") <= nProbe)
       .select(col("q_id"), col("centroid_id"), col("fa"), col("na"))
@@ -711,7 +694,7 @@ object Similarity {
       .orderBy(col("cos").desc, col("neighbor_id"))
     broadcast(probes).join(assigned, Seq("centroid_id"))
       .where(col("q_id") =!= col("neighbor_id"))
-      .select(col("q_id"), col("neighbor_id"), expr(cosExpr(s)).as("cos"))
+      .select(col("q_id"), col("neighbor_id"), cosExpr.as("cos"))
       .withColumn("rn", row_number().over(wRank))
       .where(col("rn") <= k)
       .select(col("q_id"), col("neighbor_id"), col("rn").as("rank"),
@@ -911,7 +894,6 @@ object Similarity {
     * 6-dp-quantized then decimal-summed (order-free), so the cell means
     * are engine-exact. */
   def assignMarginCensus(vecs: DataFrame, nCents: Int): DataFrame = {
-    val s = vecs.sparkSession
     val base = withFixed(vecs)
     val cents = base.orderBy("vec_id").limit(nCents)
       .select(col("vec_id").as("centroid_id"), col("f").as("fb"),
@@ -920,7 +902,7 @@ object Similarity {
       .orderBy(col("cos").desc, col("centroid_id"))
     val per = base.select(col("vec_id"), col("f").as("fa"), col("nrm").as("na"))
       .crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("centroid_id"), expr(cosExpr(s)).as("cos"))
+      .select(col("vec_id"), col("centroid_id"), cosExpr.as("cos"))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= 2)
       .groupBy("vec_id")
@@ -963,7 +945,6 @@ object Similarity {
     * floor(cos·20) (0.05 wide), and same-label counts per bin give the
     * separability read the threshold choice needs. Output ≤ 41 rows. */
   def pairSimCensus(vecs: DataFrame): DataFrame = {
-    val s = vecs.sparkSession
     val base = withFixed(vecs)
     val a = base.where(expr("vec_id % 2 = 0"))
       .select((col("vec_id") + 1).as("pk"), col("label").as("la"),
@@ -973,7 +954,7 @@ object Similarity {
         col("f").as("fb"), col("nrm").as("nb"))
     a.join(b, Seq("pk"))
       .select(
-        expr(s"cast(floor((${cosExpr(s)}) * 20.0) as bigint)").as("cos_bin"),
+        floor(cosExpr * 20.0).cast("bigint").as("cos_bin"),
         when(col("la") === col("lb"), 1L).otherwise(0L).as("same"))
       .groupBy("cos_bin")
       .agg(count(lit(1)).as("n_pairs"), sum("same").as("n_same_label"))
@@ -1092,7 +1073,7 @@ object Similarity {
     val scored = broadcast(queries)
       .join(corpus, col("q_id") =!= col("neighbor_id"))
       .select(col("q_id"), col("neighbor_id"), col("keep"),
-        expr(cosExpr(vecs.sparkSession)).as("cos"))
+        cosExpr.as("cos"))
     val wAll = Window.partitionBy("q_id")
       .orderBy(col("cos").desc, col("neighbor_id"))
     val wKeep = Window.partitionBy("q_id", "keep")
@@ -1162,9 +1143,9 @@ object Similarity {
     val wLit = s"array(${w.mkString("L,")}L)"
     val active = vecs
       .selectExpr("label", s"$fixedExpr as f")
-      .selectExpr("f",
-        "(case when label < 5 then 1L else -1L end) as y",
-        s"${dotExpr(s, "f", s"slice($wLit, 1, size(f))")} as z")
+      .select(col("f"),
+        expr("(case when label < 5 then 1L else -1L end)").as("y"),
+        fpDot(col("f"), expr(s"slice($wLit, 1, size(f))")).as("z"))
       .where(col("y") * col("z") < lit(100000L))
     val perDim = active
       .select(col("y"), posexplode(col("f")).as(Seq("dim", "x")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import graft.plans.Md5Long56.md5Long56
 
 /** Count-Min Sketch over the token stream, formulated relationally so it
   * is engine-portable and oracle-checkable.
@@ -31,7 +32,7 @@ object Sketch {
   private[graft] def tokenCounts(docs: DataFrame): DataFrame =
     docs.select(explode(expr(Dedup.tokensExpr)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
-      .withColumn("h", expr(Dedup.md5Long56("word")))
+      .withColumn("h", md5Long56(col("word")))
 
   private def positioned(counts: DataFrame, depth: Int, width: Int): DataFrame = {
     val rows = (0 until depth).map(j =>

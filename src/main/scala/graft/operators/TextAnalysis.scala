@@ -8,6 +8,8 @@ import org.apache.spark.sql.types.DecimalType
 import graft.{Q, Tables}
 import graft.functions.Parity
 import graft.functions.Parity.pround
+import graft.plans.GopherStats.gopherStats
+import graft.plans.Md5Long56.md5Long56
 
 /** Text-analysis operators for training-data pipelines (SURVEY.md §2.G
   * [EXT]): language ID, quality scoring, token counting, fingerprinting,
@@ -551,7 +553,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("source"),
         explode(expr(bigramsFromToks)).as("g"))
       .select(col("doc_id"), col("source"),
-        (expr(Dedup.md5Long56("g")) % buckets).as("b"))
+        (md5Long56(col("g")) % buckets).as("b"))
     val lm = bg.groupBy("b").agg(
       count(lit(1)).as("cr"),
       sum(when(col("source") === targetSource, 1L).otherwise(0L)).as("ct"))
@@ -626,7 +628,7 @@ object TextAnalysis {
   def winnowFingerprints(docs: DataFrame, w: Int = 4): DataFrame = {
     val sh = Dedup.shinglePosRows(docs)
       .select(col("doc_id"), col("pos"),
-        expr(Dedup.md5Long56("sh")).as("h"))
+        md5Long56(col("sh")).as("h"))
     val win = Window.partitionBy("doc_id").orderBy("pos")
       .rowsBetween(Window.currentRow, w - 1)
     val doc = Window.partitionBy("doc_id")
@@ -767,7 +769,7 @@ object TextAnalysis {
     // real corpus; see the expression's doc for the dialect note).
     val perDoc = docs
       .select(col("doc_id"), col("source"),
-        expr("gopher_stats(text)").as("gs"))
+        gopherStats(col("text")).as("gs"))
       .select(col("doc_id"), col("source"),
         col("gs.n_tokens").as("n_tokens"),
         col("gs.sum_wlen").as("sum_wlen"),
@@ -1390,7 +1392,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("source"), explode(expr(tokensExpr)).as("w"))
       .groupBy(col("doc_id"), col("source"))
       .agg(count(lit(1)).as("toks"),
-        sum(when(expr(s"${Dedup.md5Long56("w")} % 5") === 0, 1L)
+        sum(when(md5Long56(col("w")) % 5 === 0, 1L)
           .otherwise(0L)).as("hits"))
     docs.select(col("doc_id"), col("source"))
       .join(per, Seq("doc_id", "source"), "left_outer")

@@ -1,11 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.types._
 
 /** `fp_dot(array<long>, array<long>) -> long`: exact fixed-point dot
@@ -68,8 +69,18 @@ case class FixedDotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session extension registering graft's native functions; enable with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`. */
+object FixedDotProduct {
+
+  /** Exact long dot product of two `array<bigint>` columns. */
+  def fpDot(a: Column, b: Column): Column =
+    column(FixedDotProduct(expression(a), expression(b)))
+}
+
+/** Session extension giving graft's native expressions their SQL names
+  * (`fp_dot`, `md5_long56`, `gopher_stats`) for `spark.sql(...)`; enable
+  * with `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
+  * Operators do not need it: they build the same case classes as
+  * Columns (`fpDot`, `md5Long56`, `gopherStats`). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((

@@ -1,10 +1,12 @@
 package graft.plans
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graftbridge.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -60,6 +62,9 @@ case class GopherStats(child: Expression) extends UnaryExpression {
 }
 
 object GopherStats {
+
+  /** The per-doc token census struct of string column `text`. */
+  def gopherStats(text: Column): Column = column(GopherStats(expression(text)))
 
   val Schema: StructType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),

@@ -1,8 +1,10 @@
 package graft.plans
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftbridge.ExpressionColumns.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,7 +26,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Null propagates (matches md5/conv/cast null semantics). Input is
   * StringType only — every call site hashes a string key (casting
-  * non-strings explicitly is the md5Long56 contract).
+  * non-strings explicitly is the md5Long56 contract). Operators call it
+  * as a Column through [[Md5Long56.md5Long56]]; `md5_long56` is its SQL
+  * name under GraftExtensions.
   */
 case class Md5Long56(child: Expression) extends UnaryExpression {
 
@@ -47,6 +51,12 @@ case class Md5Long56(child: Expression) extends UnaryExpression {
 }
 
 object Md5Long56 {
+
+  /** The 56-bit md5-prefix long of string column `c` (DuckDB mirror:
+    * `('0x' || substr(md5(c), 1, 14))::BIGINT`). Non-string keys are cast
+    * by the caller. */
+  def md5Long56(c: Column): Column = column(Md5Long56(expression(c)))
+
   // MessageDigest is stateful — one per thread, reset by digest() itself.
   private val md = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =

@@ -102,19 +102,24 @@ class CacheLatchSpec extends AnyFunSuite {
     // r20 shared-build attribution: the ladder's nested builds
     // (clusters → candidates → …) must not double-count — the clock's
     // delta across an outer build that sleeps 50ms around an inner
-    // 50ms build must be ~100ms, not ~150ms.
+    // 50ms build must be at most the outer build's own wall time. A
+    // double-counted inner build adds its ~50ms on top of that wall
+    // time, however slow the host; a fixed ceiling would flake under load.
     val outer = new SingleFlight[String]
     val inner = new SingleFlight[String]
     val mo = new ConcurrentHashMap[String, Integer]
     val mi = new ConcurrentHashMap[String, Integer]
     val before = SingleFlight.buildSecondsTotal
+    val t0 = System.nanoTime()
     outer(mo, "k") {
       Thread.sleep(50)
       Integer.valueOf(inner(mi, "k") { Thread.sleep(50); Integer.valueOf(1) }.intValue())
     }
+    val outerWall = (System.nanoTime() - t0) / 1e9
     val delta = SingleFlight.buildSecondsTotal - before
-    assert(delta >= 0.09 && delta < 0.15,
-      s"nested build clock delta $delta s — expected ~0.1 (outermost only)")
+    assert(delta >= 0.09 && delta <= outerWall,
+      s"nested build clock delta $delta s — expected within the outer " +
+        s"build's wall time $outerWall s (outermost only)")
   }
 
   test("DedupQueries.cached: nested build across two EMPTY caches cannot deadlock (identity-keyed flights)") {

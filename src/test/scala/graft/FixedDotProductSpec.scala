@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.plans.FixedDotProduct.fpDot
+
 class FixedDotProductSpec extends SparkSpec {
   import spark.implicits._
 
@@ -24,7 +26,7 @@ class FixedDotProductSpec extends SparkSpec {
 
   test("fp_dot null array yields null") {
     val r = Seq((Some(Seq(1L)), Option.empty[Seq[Long]])).toDF("a", "b")
-      .select(expr("fp_dot(a, b)")).collect()(0)
+      .select(fpDot(col("a"), col("b"))).collect()(0)
     assert(r.isNullAt(0))
   }
 
@@ -33,20 +35,10 @@ class FixedDotProductSpec extends SparkSpec {
     // into a LocalTableScan
     val vecs = Tables.embeddings(spark, sf("sf0.001"))
       .select(expr(operators.Similarity.fixedExpr).as("f"))
-    val plan = vecs.select(expr("fp_dot(f, f)").as("d"))
+    val plan = vecs.select(fpDot(col("f"), col("f")).as("d"))
       .queryExecution.executedPlan.toString
     // the "*(n)" prefix marks a WholeStageCodegen stage; fp_dot must be
     // inside one (the HOF-based transform projection above it is not)
     assert(plan.split("\n").exists(l => l.contains("fp_dot") && l.trim.startsWith("*(")))
-  }
-
-  test("similarity results identical with and without the native expression") {
-    // dotExpr falls back to the HOF form when fp_dot is absent; both paths
-    // must produce byte-identical cosines (exact long arithmetic).
-    val vecs = Tables.embeddings(spark, sf("sf0.001"))
-    val native = operators.Similarity.cosineTopK(vecs, 3, 5)
-      .as[(Long, Long, Int, Double)].collect().toSet
-    assert(operators.Similarity.dotExpr(spark, "x", "y").startsWith("fp_dot"))
-    assert(native.nonEmpty)
   }
 }
